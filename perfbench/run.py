@@ -65,12 +65,13 @@ ZIPF_S = 1.1
 #: this long counts as failed.
 FRESH_TIMEOUT_S = 30.0
 
-#: The contract's metrics. Wall-clock figures (ingest events/s, refresh
-#: latency) and memory (peak RSS, live heap) are printed too, but the
-#: contract bounds what stays put from run to run: on a shared 4-core VM,
-#: CPU steal moved wall times by up to 2x between runs minutes apart, and
+#: The contract's metrics; ``setup_s`` is the CPU a server start-up
+#: costs. Wall-clock figures (set-up, ingest events/s, refresh latency)
+#: and memory (peak RSS, live heap) are printed too, but the contract
+#: bounds what stays put from run to run: on a shared 4-core VM, CPU
+#: steal moved wall times by up to 2x between runs minutes apart, and
 #: both memory figures jumped by a quarter to a third between runs, while
-#: CPU time outside JIT compilation moved by under a tenth.
+#: CPU time outside JIT compilation moved far less.
 END_TO_END = {
     "setup_s": "s",
     "sink_bytes_per_event": "B",
@@ -365,19 +366,22 @@ class Bench:
                 ("app_tasks", tasks_ok), ("app_executors", execs_ok)]
 
     def start_server(self, warmup: bool):
-        """``SETUP_REPS`` server start-ups over the sink; the median is
-        ``setup_s``. The last server is kept and started."""
-        times, srv = [], None
+        """``SETUP_REPS`` server start-ups over the sink; the median CPU
+        of a start-up is ``setup_s``, its median wall time is printed. The
+        last server is kept and started."""
+        times, cpu, srv = [], [], None
         for k in range(SETUP_REPS):
             if srv is not None:
                 srv.events.unpersist(blocking=True)
                 srv.server_close()
-            t = time.perf_counter()
+            t, c = time.perf_counter(), proctree.cpu_s()
             srv = self.API.serve(
                 self.EL.read_events_sink(self.spark, self.sink),
                 metrics_rollup_path=self.rollup, warmup=warmup)
             times.append(time.perf_counter() - t)
-        self.metrics["setup_s"] = statistics.median(times)
+            cpu.append(proctree.cpu_s() - c)
+        self.metrics["setup_s"] = statistics.median(cpu)
+        self.report.append(("setup_wall_s", statistics.median(times), "s"))
         th = threading.Thread(target=srv.serve_forever, daemon=True)
         th.start()
         return srv, th, srv.server_address[1]
