@@ -1,29 +1,34 @@
 #!/usr/bin/env python3
-"""End-to-end benchmark of the history-analytics engine: Spark event logs
-on disk -> incremental ingest -> date-partitioned sink -> metrics rollup
--> catalog query -> REST JSON.
+"""End-to-end benchmark of the history-analytics engine.
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload history_ingest --seed 1 \
-        --seconds 20 --trace 0
+    python3 perfbench/run.py --workload event_history --seed 1 \
+        --seconds 1 --trace 0
 
-Workloads (see perfbench/README.md for sizes and the metric map):
+Each workload builds durable state from seeded inputs, starts ``serve()``
+over it, answers a query round and runs one update; the order and the
+checks differ. See perfbench/README.md for sizes and the metric map.
 
-- ``history_ingest``: write-heavy. A full ``incremental_ingest`` of a
-  seeded history, then refresh rounds: running applications grow and a
-  new one arrives, ``incremental_ingest`` picks the change up,
-  ``write_metrics_rollup`` rebuilds the rollup from the sink, and a
-  rollup-served REST route is polled until the new totals show.
-- ``dashboard_http``: read-heavy. The same ingest and rollup build,
-  then ``serve()`` answers one client's rounds over nine dashboard
-  routes.
+- ``event_history``: Spark event logs on disk -> ``incremental_ingest``
+  -> date-partitioned sink -> ``write_metrics_rollup`` -> REST. The query
+  round fetches nine dashboard routes at once; then the update, a
+  refresh: running applications grow and a new one arrives, ingest picks
+  the change up, the rollup is rebuilt, and a rollup-served route is
+  polled until the new totals show.
+- ``corpus_index``: seeded documents and embeddings -> the S13 dedup,
+  S14 ANN, S16 kNN-graph and S15 training-shard indexes, built at once.
+  The update comes first: ``run_retention_pass`` erases a seeded 1 % of
+  the corpus. The query round then probes the dedup index with new
+  documents and the ANN index with new vectors, and fetches the
+  index-served dedup sweep and graph expansion over REST, all at once;
+  no erased id may show in any answer.
 
 The engine is driven only through its public functions and its HTTP
-server; the program sees only the generated inputs. Every response that
-can be checked against the generator's truth table is checked; a failed
-check counts the operation as failed. Human-readable lines go first; the
-last line of standard output is one JSON object.
+server; the program sees only the generated inputs. Every answer that
+can be checked against the generators' truth is checked; a failed check
+counts the operation as failed. Human-readable lines go first; the last
+line of standard output is one JSON object.
 
 With ``--trace 1`` Spark's event log is switched on through launch
 configuration, spans are recorded around every call into the engine, and
@@ -44,43 +49,53 @@ import threading
 import time
 import urllib.error
 import urllib.request
+from concurrent.futures import ThreadPoolExecutor
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path[:0] = [HERE, ROOT]
 
+import corpus  # noqa: E402
 import eventlogs  # noqa: E402
 import proctree  # noqa: E402
 import sparktrace  # noqa: E402
 
-WORKLOADS = ("history_ingest", "dashboard_http")
+WORKLOADS = ("event_history", "corpus_index")
 
 #: Applications in the seeded history, and the share still running.
-N_APPS = 20
+N_APPS = 100
 RUNNING_SHARE = 0.2
-#: Set-up repetitions whose median is ``setup_s``.
-SETUP_REPS = 2
+#: Documents in the seeded corpus (one embedding each), new documents in
+#: the probe batch, query vectors, and the share the retention pass erases.
+N_DOCS = 300
+N_NEW_DOCS = 20
+N_QUERY_VECS = 5
+LOSER_SHARE = 0.01
 ZIPF_S = 1.1
+#: Server starts per run; the median CPU of a start is ``setup_s``.
+SETUP_REPS = 2
 #: A refresh whose served totals have not caught up with the sink after
 #: this long counts as failed.
-FRESH_TIMEOUT_S = 30.0
+FRESH_TIMEOUT_S = 10.0
 
-#: The contract's metrics; ``setup_s`` is the CPU a server start-up
-#: costs. Wall-clock figures (set-up, ingest events/s, refresh latency)
-#: and memory (peak RSS, live heap) are printed too, but the contract
-#: bounds what stays put from run to run: on a shared 4-core VM, CPU
-#: steal moved wall times by up to 2x between runs minutes apart, and
-#: both memory figures jumped by a quarter to a third between runs, while
-#: CPU time outside JIT compilation moved far less.
+#: The contract's metrics. Every workload reports each one; what it
+#: measures per workload is in perfbench/README.md. CPU figures sum the
+#: Python process and its descendants, the JVM's JIT compiler threads
+#: left out (see proctree.cpu_s). Wall times are printed but not bounded:
+#: on the shared VM the benchmark was built on, the dashboard round's wall
+#: time spread by a quarter over ten runs.
 END_TO_END = {
     "setup_s": "s",
-    "sink_bytes_per_event": "B",
-    "ingest_cpu_us_per_event": "us",
-    "refresh_cpu_ms": "ms",
+    "build_cpu_s": "s",
+    "bytes_per_record": "B",
+    "update_cpu_ms": "ms",
+    "query_cpu_ms": "ms",
 }
 
 #: Spans around calls into the engine; each reports the counters of
 #: ``sparktrace.SPAN_COUNTERS``. ``api.request`` sums the per-route spans.
+#: All but the first and ``api.request`` wrap the function of that name
+#: in ``spark_history_server_rs_spark.sources`` (or ``.api.server``).
 SPANS = (
     "session.get_spark",
     "event_logs.plan_incremental",
@@ -89,13 +104,21 @@ SPANS = (
     "metrics_rollup.write_metrics_rollup",
     "api.serve",
     "api.request",
+    "dedup_index.write_dedup_index",
+    "ann_index.write_ann_index",
+    "knn_graph.write_knn_graph",
+    "training_shards.write_training_shards",
+    "dedup_index.minhash_lsh_probe_index",
+    "ann_index.ann_ivf_pq_from_index",
+    "knn_graph.ann_graph_expand_from_index",
+    "dedup_index.dedup_threshold_sweep_from_index",
+    "maintenance.run_retention_pass",
 )
-#: The dashboard route mix: the reference's 7-query suite as REST routes
+#: event_history's dashboard: the reference's 7-query suite as REST routes
 #: (executor utilization has no route; the per-app detail stands in),
 #: plus capacity trends and cost optimization. ``{app}`` is drawn Zipf.
 #: The second field says how the route takes a date window ("day" or
-#: "ms" granularity); three of the routes always get a seeded window, so
-#: every round has the same mix of windowed and whole-history requests.
+#: "ms" granularity); three routes always get a seeded window.
 ROUTES = {
     "applications": ("/api/v1/applications", None),
     "app_detail": ("/api/v1/applications/{app}", None),
@@ -107,9 +130,15 @@ ROUTES = {
     "usage_trends": ("/api/v1/capacity/usage-trends", "ms"),
     "cost_optimization": ("/api/v1/capacity/cost-optimization", None),
 }
+#: corpus_index's index-served routes.
+INDEX_ROUTES = {
+    "dedup_sweep": "/api/v1/corpus/dedup-sweep",
+    "graph_expand": "/api/v1/ann/graph-expand",
+}
 
 CHECKS = ("http_status", "sink_rows", "app_ids", "app_events", "app_tasks",
-          "app_executors", "route_totals", "trend_days", "rollup_fresh")
+          "app_executors", "route_totals", "trend_days", "rollup_fresh",
+          "dedup_pairs", "ann_neighbors", "erased_ids")
 
 COUNTS = {
     "event_logs.files_reingested": "count",
@@ -118,7 +147,7 @@ COUNTS = {
     "event_logs.sink_bytes": "B",
     "metrics_rollup.files": "count",
     "metrics_rollup.bytes": "B",
-    "trace.headline_ms": "ms",
+    "trace.update_cpu_ms": "ms",
 }
 
 
@@ -127,7 +156,7 @@ def per_layer_units() -> dict[str, str]:
     for s in SPANS:
         for c, u in sparktrace.SPAN_COUNTERS.items():
             out[f"{s}.{c}"] = u
-    for r in ROUTES:
+    for r in list(ROUTES) + list(INDEX_ROUTES):
         out[f"api.request.{r}.p50_ms"] = "ms"
     out.update(COUNTS)
     for c in CHECKS:
@@ -206,13 +235,6 @@ def _stop_spark(spark) -> None:
 # --------------------------------------------------------------------------
 # measurement helpers
 # --------------------------------------------------------------------------
-def _pct(values: list[float], q: float) -> float:
-    """Nearest-rank percentile."""
-    s = sorted(values)
-    k = max(0, min(len(s) - 1, int(round(q / 100.0 * len(s) + 0.5)) - 1))
-    return s[k]
-
-
 def _dir_stats(path: str) -> tuple[int, int]:
     """(data files, bytes) under a parquet dataset dir."""
     files = size = 0
@@ -250,18 +272,20 @@ class Ledger:
         self.check_failed = dict.fromkeys(CHECKS, 0)
         self.check_runs = dict.fromkeys(CHECKS, 0)
         self.notes: dict[str, str] = {}
+        self._lock = threading.Lock()
 
     def op(self, results: list[tuple]) -> None:
         """Record one operation from its ``(check, ok[, note])`` results;
         the note of a check's first failure is kept for the report."""
-        ok = all(r[1] for r in results)
-        self.attempted += 1
-        self.failed += 0 if ok else 1
-        for name, r, *note in results:
-            self.check_runs[name] += 1
-            self.check_failed[name] += 0 if r else 1
-            if not r and note:
-                self.notes.setdefault(name, note[0])
+        with self._lock:
+            ok = all(r[1] for r in results)
+            self.attempted += 1
+            self.failed += 0 if ok else 1
+            for name, r, *note in results:
+                self.check_runs[name] += 1
+                self.check_failed[name] += 0 if r else 1
+                if not r and note:
+                    self.notes.setdefault(name, note[0])
 
 
 # --------------------------------------------------------------------------
@@ -276,165 +300,187 @@ class Bench:
         self.tracer = sparktrace.Tracer(self.trace)
         self.ledger = Ledger()
         self.logs = os.path.join(work, "logs")
-        self.sink = os.path.join(work, "sink")
+        self.sink_dir = os.path.join(work, "sink")
         self.manifest = os.path.join(work, "manifest")
         self.rollup = os.path.join(work, "rollup")
+        self.index = {k: os.path.join(work, k) for k in ("s13", "s14", "s16", "s15")}
         self.planned: list[list[str]] = []
         self.metrics: dict[str, float] = {}
         self.report: list[tuple[str, float, str]] = []
         self.counts: dict[str, float] = {}
+        self.setup_cpu: list[float] = []
+        self.round_cpu: list[float] = []
+        self.round_ms: list[float] = []
+        self.laps: list[tuple[str, float]] = [("start", time.perf_counter())]
+
+    def lap(self, phase: str) -> None:
+        """Close a phase: its wall time is printed as ``<phase>_wall_s``."""
+        self.laps.append((phase, time.perf_counter()))
+        self.report.append((f"{phase}_wall_s", self.laps[-1][1] - self.laps[-2][1], "s"))
 
     # -- engine entry points, spanned at the module attribute -------------
     def bind(self, spark) -> None:
         from spark_history_server_rs_spark.api import server as API
-        from spark_history_server_rs_spark.sources import event_logs as EL
-        from spark_history_server_rs_spark.sources import metrics_rollup as MR
+        from spark_history_server_rs_spark.sources import (
+            ann_index, dedup_index, event_logs, knn_graph, maintenance,
+            metrics_rollup, training_shards)
 
+        mods = {"event_logs": event_logs, "metrics_rollup": metrics_rollup,
+                "dedup_index": dedup_index, "ann_index": ann_index,
+                "knn_graph": knn_graph, "training_shards": training_shards,
+                "maintenance": maintenance}
         self.tracer.spark = spark
-        self.spark, self.EL, self.MR, self.API = spark, EL, MR, API
-        plan = EL.plan_incremental
+        self.spark, self.API = spark, API
+        self.EL, self.MR = event_logs, metrics_rollup
+        self.DI, self.AI, self.KG = dedup_index, ann_index, knn_graph
+        self.TS, self.MT = training_shards, maintenance
+        plan = event_logs.plan_incremental
 
         def counted_plan(*a, **kw):
             todo, manifest = plan(*a, **kw)
             self.planned.append(list(todo))
             return todo, manifest
 
-        EL.plan_incremental = counted_plan
-        t = self.tracer
-        t.wrap(EL, "plan_incremental", "event_logs.plan_incremental")
-        t.wrap(EL, "incremental_ingest", "event_logs.incremental_ingest")
-        t.wrap(EL, "read_events_sink", "event_logs.read_events_sink")
-        t.wrap(MR, "write_metrics_rollup", "metrics_rollup.write_metrics_rollup")
-        t.wrap(API, "serve", "api.serve")
+        event_logs.plan_incremental = counted_plan
+        # the HTTP handlers import the index functions when a request
+        # arrives, so they call the wrappers too
+        for name in SPANS:
+            mod, _, attr = name.partition(".")
+            if mod in mods:
+                self.tracer.wrap(mods[mod], attr, name)
+        self.tracer.wrap(API, "serve", "api.serve")
 
-    # -- shared phases -------------------------------------------------------
-    def make_history(self) -> eventlogs.History:
-        return eventlogs.History(self.logs, self.seed, N_APPS, RUNNING_SHARE)
-
-    def first_ingest(self, hist: eventlogs.History) -> dict:
-        """The full ingest of the history, measured for its CPU cost per
-        event and its wall-clock event rate.
-
-        An ingest of a two-app history into a scratch sink runs first, so
-        the timed pass meets a JIT-warm engine, as a long-running history
-        server's ingest does; the cold JVM's compile time would otherwise
-        swamp the data work."""
-        scratch = os.path.join(self.work, "warmup")
-        eventlogs.History(os.path.join(scratch, "logs"), self.seed + 1, 2, 0.0)
-        self.EL.incremental_ingest(self.spark, os.path.join(scratch, "logs"),
-                                   os.path.join(scratch, "sink"),
-                                   os.path.join(scratch, "manifest"))
-        truth = hist.truth()
-        t, cpu = time.perf_counter(), proctree.cpu_s()
-        self.EL.incremental_ingest(self.spark, self.logs, self.sink, self.manifest)
-        self.metrics["ingest_cpu_us_per_event"] = (
-            (proctree.cpu_s() - cpu) / truth["events"] * 1e6)
-        self.report.append(("ingest_events_per_s",
-                            truth["events"] / (time.perf_counter() - t), "1/s"))
-        return truth
-
-    def write_rollup(self, truth: dict) -> None:
-        self.MR.write_metrics_rollup(
-            self.EL.read_events_sink(self.spark, self.sink), self.rollup)
-        if "sink_bytes_per_event" not in self.metrics:
-            sb, rb = _dir_stats(self.sink)[1], _dir_stats(self.rollup)[1]
-            self.metrics["sink_bytes_per_event"] = (sb + rb) / truth["events"]
-
-    def sink_checks(self, truth: dict) -> list[tuple]:
-        """Row count, app ids, and per-app task and executor counts of the
-        sink, against the truth table, from one aggregate over the sink."""
-        from pyspark.sql import functions as F
-
-        ev = self.spark.read.parquet(self.sink)
-        role = F.col("is_task") | F.col("is_exec_add")
-        rows = {r["app_id"]: r for r in ev.groupBy("app_id").agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("is_task").cast("int")).alias("tasks"),
-            F.collect_set(F.when(role, F.col("executor_id"))).alias("execs"),
-        ).collect()}
-        extra = sorted(set(rows) - set(truth["apps"]))
-        tasks_ok = execs_ok = True
-        for app, t in truth["apps"].items():
-            r = rows.get(app)
-            tasks_ok &= r is not None and r["tasks"] == t["tasks"]
-            execs_ok &= r is not None and sorted(r["execs"]) == t["executors"]
-        n = sum(r["n"] for r in rows.values())
-        return [("sink_rows", n == truth["events"],
-                 f"sink rows {n} vs events in the logs {truth['events']}"),
-                ("app_ids", not extra and len(rows) == len(truth["apps"]),
-                 f"ids not in the logs' truth, e.g. {extra[:2]}"),
-                ("app_tasks", tasks_ok), ("app_executors", execs_ok)]
-
-    def start_server(self, warmup: bool):
-        """``SETUP_REPS`` server start-ups over the sink; the median CPU
-        of a start-up is ``setup_s``, its median wall time is printed. The
-        last server is kept and started."""
-        times, cpu, srv = [], [], None
-        for k in range(SETUP_REPS):
+    # -- shared phases ---------------------------------------------------------
+    def start_server(self, events, **attach):
+        """``SETUP_REPS`` starts of ``serve()``; the median CPU of a start
+        is ``setup_s``. The last server is kept, with a thread that answers
+        requests."""
+        srv = None
+        for _ in range(SETUP_REPS):
             if srv is not None:
-                srv.events.unpersist(blocking=True)
-                srv.server_close()
-            t, c = time.perf_counter(), proctree.cpu_s()
-            srv = self.API.serve(
-                self.EL.read_events_sink(self.spark, self.sink),
-                metrics_rollup_path=self.rollup, warmup=warmup)
-            times.append(time.perf_counter() - t)
-            cpu.append(proctree.cpu_s() - c)
-        self.metrics["setup_s"] = statistics.median(cpu)
-        self.report.append(("setup_wall_s", statistics.median(times), "s"))
+                self.close_server(srv)
+            c = proctree.cpu_s()
+            srv = self.API.serve(events, **attach)
+            self.setup_cpu.append(proctree.cpu_s() - c)
         th = threading.Thread(target=srv.serve_forever, daemon=True)
         th.start()
+        self.lap("setup")
         return srv, th, srv.server_address[1]
+
+    def close_server(self, srv) -> None:
+        srv.server_close()
+        for frame in (srv.events, srv.documents, srv.embeddings):
+            if frame is not None:
+                frame.unpersist(blocking=True)
 
     def stop_server(self, srv, th) -> None:
         srv.shutdown()
-        srv.server_close()
         th.join(timeout=30)
+        self.close_server(srv)
 
-    # -- history_ingest -------------------------------------------------------
-    def history_ingest(self) -> None:
-        hist = self.make_history()
-        self.first_ingest(hist)
-        # the first refresh round builds the rollup the server answers from
-        srv, th, port = self.start_server(warmup=False)
-        deadline = time.perf_counter() + self.args.seconds
-        refresh, cpu, reread, reingested, appended = [], [], 0, 0, 0
+    def together(self, ops) -> None:
+        """Run independent operations at once, on up to ``nproc``
+        threads, as a dashboard loads its panels or a pipeline builds its
+        indexes. A traced run runs them one at a time, so that jobs
+        without a tag are charged to the right span by their time."""
+        if self.trace:
+            for op in ops:
+                op()
+            return
+        with ThreadPoolExecutor(max_workers=len(os.sched_getaffinity(0))) as pool:
+            for f in [pool.submit(op) for op in ops]:
+                f.result()
+
+    def rounds(self, make_ops) -> None:
+        """Query rounds until ``--seconds`` have passed, at least one. Each
+        round runs the operations ``make_ops()`` returns together; its CPU
+        and its wall time are kept."""
+        end = time.perf_counter() + self.args.seconds
+        while not self.round_ms or time.perf_counter() < end:
+            ops = make_ops()
+            t, c = time.perf_counter(), proctree.cpu_s()
+            self.together(ops)
+            self.round_cpu.append((proctree.cpu_s() - c) * 1000.0)
+            self.round_ms.append((time.perf_counter() - t) * 1000.0)
+        self.lap("query")
+
+    def get(self, port: int, key: str, path: str):
+        """One request in an ``api.request.<key>`` span; a non-200 answer
+        or a connection error is a failed operation."""
         try:
-            while not refresh or time.perf_counter() < deadline:
-                known = self._listing()
-                appended += hist.grow(1)
-                truth = hist.truth()
-                t0, c0 = time.perf_counter(), proctree.cpu_s()
-                self.EL.incremental_ingest(
-                    self.spark, self.logs, self.sink, self.manifest)
-                self.write_rollup(truth)
-                t1, c1 = time.perf_counter(), proctree.cpu_s()
-                # the rewritten rollup must serve what the sink now holds
-                # (untimed; the sink against the logs is checked at the end)
-                sunk = self.spark.read.parquet(self.sink).count()
-                t2, c2 = time.perf_counter(), proctree.cpu_s()
-                fresh = self._poll_fresh(port, sunk)
-                refresh.append((t1 - t0 + time.perf_counter() - t2) * 1000.0)
-                cpu.append((c1 - c0 + proctree.cpu_s() - c2) * 1000.0)
-                self.ledger.op([("rollup_fresh", fresh)])
-                for p in map(_local, self.planned[-1]):
-                    if p in known:
-                        reingested += 1
-                        reread += os.path.getsize(p)
-            self.ledger.op(self.history_final_checks(port, truth)
-                           + self.sink_checks(truth))
+            with self.tracer.span(f"api.request.{key}"):
+                status, body = http_get(port, path)
+        except OSError:
+            status, body = None, None
+        return status, body
+
+    def finish(self, update_cpu_ms: float) -> None:
+        self.metrics["setup_s"] = statistics.median(self.setup_cpu)
+        self.metrics["update_cpu_ms"] = update_cpu_ms
+        self.metrics["query_cpu_ms"] = statistics.median(self.round_cpu)
+        self.counts["trace.update_cpu_ms"] = update_cpu_ms
+        self.report += [
+            ("query_ms", statistics.median(self.round_ms), f"ms (rounds: {len(self.round_ms)})"),
+        ]
+
+    # -- event_history ---------------------------------------------------------
+    def event_history(self) -> None:
+        hist = eventlogs.History(self.logs, self.seed, N_APPS, RUNNING_SHARE)
+        truth = hist.truth()
+        t, c = time.perf_counter(), proctree.cpu_s()
+        self.EL.incremental_ingest(self.spark, self.logs, self.sink_dir, self.manifest)
+        ingest_wall = time.perf_counter() - t
+        self.MR.write_metrics_rollup(
+            self.EL.read_events_sink(self.spark, self.sink_dir), self.rollup)
+        self.metrics["build_cpu_s"] = proctree.cpu_s() - c
+        self.metrics["bytes_per_record"] = (
+            _dir_stats(self.sink_dir)[1] + _dir_stats(self.rollup)[1]) / truth["events"]
+        self.report += [("ingest_events_per_s", truth["events"] / ingest_wall, "1/s"),
+                        ("events", truth["events"], "")]
+        self.lap("build")
+        rng = random.Random(self.seed * 1_000_003 + 17)
+
+        srv, th, port = self.start_server(
+            self.EL.read_events_sink(self.spark, self.sink_dir),
+            metrics_rollup_path=self.rollup, warmup=False)
+        try:
+            self.rounds(lambda: self.dashboard_round(port, rng, truth))
+            update_cpu, truth = self.refresh(hist, port)
+            self.lap("update")
+            self.ledger.op(self.history_final_checks(port, truth))
         finally:
             self.stop_server(srv, th)
-        self.metrics["refresh_cpu_ms"] = statistics.median(cpu)
-        self.counts["event_logs.files_reingested"] = reingested
-        self.counts["event_logs.reread_bytes_per_appended_byte"] = (
-            reread / appended if appended else 0.0)
-        self.counts["trace.headline_ms"] = statistics.median(cpu)
-        self.report += [("refresh_p50_ms", statistics.median(refresh),
-                         f"ms (n={len(refresh)})")]
+        self.ledger.op(self.sink_checks(truth))
+        self.lap("check")
+        self.finish(update_cpu)
 
-    def _listing(self) -> set[str]:
-        return {os.path.join(dp, f) for dp, _, fns in os.walk(self.logs) for f in fns}
+    def refresh(self, hist: eventlogs.History, port: int) -> tuple[float, dict]:
+        """The update: running applications run one more job and a new
+        one arrives; ingest picks the change up, the rollup is rebuilt,
+        and a rollup-served route is polled until it serves the new
+        totals. Returns the round's CPU in ms and the new truth."""
+        known = {os.path.join(dp, f) for dp, _, fns in os.walk(self.logs) for f in fns}
+        appended = hist.grow(1)
+        truth = hist.truth()
+        t0, c0 = time.perf_counter(), proctree.cpu_s()
+        self.EL.incremental_ingest(self.spark, self.logs, self.sink_dir, self.manifest)
+        self.MR.write_metrics_rollup(
+            self.EL.read_events_sink(self.spark, self.sink_dir), self.rollup)
+        t1, c1 = time.perf_counter(), proctree.cpu_s()
+        # the rewritten rollup must serve what the sink now holds (counting
+        # the sink is not part of the round; the sink against the logs is
+        # checked at the end)
+        sunk = self.sink().count_rows()
+        t2, c2 = time.perf_counter(), proctree.cpu_s()
+        fresh = self._poll_fresh(port, sunk)
+        cpu = (c1 - c0 + proctree.cpu_s() - c2) * 1000.0
+        self.report.append(("refresh_ms", (t1 - t0 + time.perf_counter() - t2) * 1000.0, "ms"))
+        self.ledger.op([("rollup_fresh", fresh)])
+        reingested = [p for p in map(_local, self.planned[-1]) if p in known]
+        self.counts["event_logs.files_reingested"] = len(reingested)
+        self.counts["event_logs.reread_bytes_per_appended_byte"] = (
+            sum(os.path.getsize(p) for p in reingested) / appended)
+        return cpu, truth
 
     def _poll_fresh(self, port: int, events: int) -> bool:
         end = time.perf_counter() + FRESH_TIMEOUT_S
@@ -445,129 +491,62 @@ class Bench:
             time.sleep(0.05)
         return False
 
-    def history_final_checks(self, port: int, truth: dict) -> list[tuple]:
-        """Rollup-served totals and task days after the last refresh."""
-        out = []
-        s, cas = http_get(port, ROUTES["cross_app_summary"][0])
-        s2, cap = http_get(port, "/api/v1/metrics/capacity-trends?limit=10000")
-        out.append(("http_status", s == 200 and s2 == 200))
-        if cas:
-            c = cas[0]
-            out.append(("route_totals",
-                        c["total_events"] == truth["events"]
-                        and c["successful_tasks"] + c["failed_tasks"] == truth["tasks"]))
-        if cap is not None:
-            days = sorted(r["event_date"] for r in cap)
-            out.append(("trend_days", days == truth["task_days"],
-                        f"served days {days[:3]} vs task days {truth['task_days'][:3]}"))
-        return out
-
-    # -- dashboard_http -------------------------------------------------------
-    def dashboard_http(self) -> None:
-        hist = self.make_history()
-        truth = self.first_ingest(hist)
-        self.write_rollup(truth)
-        srv, th, port = self.start_server(warmup=True)
-        self.truth = truth
-        self.days = truth["task_days"]
-        rng = random.Random(self.seed * 1_000_003 + 17)
+    def dashboard_round(self, port: int, rng: random.Random, truth: dict) -> list:
+        """One refresh of the dashboard: all nine routes, in seeded order,
+        each answer checked against the truth. Returns the requests as
+        operations to run together."""
         apps = sorted(truth["apps"])
-        rng.shuffle(apps)
         weights = [1.0 / (r + 1) ** ZIPF_S for r in range(len(apps))]
-        self.draw_app = lambda: rng.choices(apps, weights)[0]
-        try:
-            rounds, cpu, lat = self.client_loop(port, rng)
-        finally:
-            self.stop_server(srv, th)
-        self.metrics["refresh_cpu_ms"] = statistics.median(cpu)
-        self.counts["trace.headline_ms"] = statistics.median(cpu)
-        self.report += [
-            ("refresh_p50_ms", statistics.median(rounds), f"ms (n={len(rounds)})"),
-            ("http_p50_ms", statistics.median(lat), f"ms (n={len(lat)})"),
-            ("http_p90_ms", _pct(lat, 90), f"ms (n={len(lat)})"),
-        ]
+        rng.shuffle(apps)
+        keys = list(ROUTES)
+        rng.shuffle(keys)
+        ops = []
+        for key in keys:
+            path, window = ROUTES[key]
+            if "{app}" in path:
+                path = path.format(app=rng.choices(apps, weights)[0])
+            span = None
+            if window:
+                days = truth["task_days"]
+                a = rng.randrange(len(days))
+                span = (days[a], days[rng.randrange(a, len(days))])
+                if window == "day":
+                    path += f"?startDate={span[0]}&endDate={span[1]}"
+                else:
+                    path += (f"?startDate={span[0]}T00:00:00Z"
+                             f"&endDate={span[1]}T23:59:59Z")
+            if key in ("applications", "performance_trends", "usage_trends"):
+                path += ("&" if "?" in path else "?") + "limit=10000"
+            ops.append(lambda k=key, p=path, w=span: self.route_op(port, k, p, w, truth))
+        return ops
 
-    def client_loop(self, port: int, rng: random.Random):
-        """One client that sends its next request when the last one has
-        returned (a closed loop without think time), so each latency is
-        the engine's own service time. A round fetches all nine routes in
-        seeded order, as one dashboard refresh does; rounds repeat until
-        ``--seconds`` have passed. Returns the round times, the CPU each
-        round used, and the request latencies, in ms."""
-        rounds: list[float] = []
-        cpu: list[float] = []
-        lat: list[float] = []
-        end = time.perf_counter() + self.args.seconds
-        while not rounds or time.perf_counter() < end:
-            keys = list(ROUTES)
-            rng.shuffle(keys)
-            t0, c0 = time.perf_counter(), proctree.cpu_s()
-            for key in keys:
-                req = self.request(key, rng)
-                t = time.perf_counter()
-                with self.tracer.span(f"api.request.{key}"):
-                    self.send(port, req)
-                lat.append((time.perf_counter() - t) * 1000.0)
-            rounds.append((time.perf_counter() - t0) * 1000.0)
-            cpu.append((proctree.cpu_s() - c0) * 1000.0)
-        return rounds, cpu, lat
-
-    def request(self, key: str, rng: random.Random) -> tuple[str, str, tuple | None]:
-        """A request for route ``key``: a Zipf-drawn app for per-app
-        routes, a seeded window of task days for windowed routes."""
-        path, window = ROUTES[key]
-        if "{app}" in path:
-            path = path.format(app=self.draw_app())
-        span = None
-        if window:
-            a = rng.randrange(len(self.days))
-            b = rng.randrange(a, len(self.days))
-            span = (self.days[a], self.days[b])
-            if window == "day":
-                path += f"?startDate={span[0]}&endDate={span[1]}"
-            else:
-                path += (f"?startDate={span[0]}T00:00:00Z"
-                         f"&endDate={span[1]}T23:59:59Z")
-        sep = "&" if "?" in path else "?"
-        if key in ("applications", "performance_trends", "usage_trends"):
-            path += f"{sep}limit=10000"
-        return key, path, span
-
-    def send(self, port: int, req) -> None:
-        """One request, recorded in the ledger with its checks."""
-        key, path, span = req
-        try:
-            status, body = http_get(port, path)
-        except OSError:
-            status, body = None, None
+    def route_op(self, port, key, path, span, truth) -> None:
+        status, body = self.get(port, key, path)
         checks = [("http_status", status == 200)]
         if status == 200:
-            checks += self.check_body(key, path, span, body)
+            checks += self.check_route(key, path, span, body, truth)
         self.ledger.op(checks)
 
-    def check_body(self, key, path, span, body) -> list[tuple]:
-        truth = self.truth
-        want_days = [d for d in self.days if span is None or span[0] <= d <= span[1]]
+    def check_route(self, key, path, span, body, truth) -> list[tuple]:
+        want_days = [d for d in truth["task_days"]
+                     if span is None or span[0] <= d <= span[1]]
         if key == "app_detail":
             app = path.rsplit("/", 1)[1]
             return [("app_events", body["event_count"] == truth["apps"][app]["events"])]
         if key == "app_executors":
-            app = path.split("/")[4]
-            t = truth["apps"][app]
+            t = truth["apps"][path.split("/")[4]]
             return [("app_tasks", sum(e["totalTasks"] for e in body) == t["tasks"]),
                     ("app_executors", sorted(e["id"] for e in body) == t["executors"])]
-        if key == "applications" and span is None:
-            return [("app_ids", {r["id"] for r in body} == set(truth["apps"])),
+        if key == "applications":
+            return [("app_ids", {r["id"] for r in body} == set(truth["apps"]),
+                     f"ids not in the logs' truth, e.g. "
+                     f"{sorted({r['id'] for r in body} - set(truth['apps']))[:2]}"),
                     ("route_totals", sum(r["event_count"] for r in body) == truth["events"])]
-        if key == "cross_app_summary" and span is None:
-            c = body[0]
-            return [("route_totals", c["total_events"] == truth["events"]
-                     and c["successful_tasks"] + c["failed_tasks"] == truth["tasks"])]
+        if key == "cross_app_summary":
+            return []  # windowed; its whole-history totals are checked after the refresh
         if key == "performance_trends":
-            out = [("trend_days", sorted({r["event_date"] for r in body}) == want_days)]
-            if span is None:
-                out.append(("route_totals", sum(r["task_count"] for r in body) == truth["tasks"]))
-            return out
+            return [("trend_days", sorted({r["event_date"] for r in body}) == want_days),
+                    ("route_totals", sum(r["task_count"] for r in body) == truth["tasks"])]
         if key == "usage_trends":
             days = sorted(r["date"] for r in body)
             return [("trend_days", days == want_days,
@@ -575,6 +554,171 @@ class Bench:
         if key in ("efficiency", "resource_hogs", "cost_optimization"):
             return [("app_ids", {r["app_id"] for r in body} <= set(truth["apps"]))]
         return []
+
+    def history_final_checks(self, port: int, truth: dict) -> list[tuple]:
+        """Rollup-served whole-history totals after the refresh."""
+        s, cas = http_get(port, ROUTES["cross_app_summary"][0])
+        out = [("http_status", s == 200)]
+        if cas:
+            c = cas[0]
+            out.append(("route_totals",
+                        c["total_events"] == truth["events"]
+                        and c["successful_tasks"] + c["failed_tasks"] == truth["tasks"],
+                        f"served events {c['total_events']} vs {truth['events']}"))
+        return out
+
+    def sink(self):
+        """The sink read with pyarrow rather than through the engine."""
+        import pyarrow.dataset as ds
+
+        return ds.dataset(self.sink_dir, format="parquet", partitioning="hive")
+
+    def sink_checks(self, truth: dict) -> list[tuple]:
+        """Row count, app ids, and per-app task and executor counts of the
+        sink, against the truth table."""
+        t = self.sink().to_table(
+            columns=["app_id", "is_task", "is_exec_add", "executor_id"]).to_pydict()
+        rows: dict[str, dict] = {}
+        for app, task, add, ex in zip(t["app_id"], t["is_task"], t["is_exec_add"],
+                                      t["executor_id"]):
+            r = rows.setdefault(app, {"n": 0, "tasks": 0, "execs": set()})
+            r["n"] += 1
+            r["tasks"] += bool(task)
+            if (task or add) and ex is not None:
+                r["execs"].add(ex)
+        extra = sorted(set(rows) - set(truth["apps"]))
+        tasks_ok = execs_ok = True
+        for app, want in truth["apps"].items():
+            r = rows.get(app)
+            tasks_ok &= r is not None and r["tasks"] == want["tasks"]
+            execs_ok &= r is not None and sorted(r["execs"]) == want["executors"]
+        n = len(t["app_id"])
+        self.counts["event_logs.sink_files"], self.counts["event_logs.sink_bytes"] = (
+            _dir_stats(self.sink_dir))
+        self.counts["metrics_rollup.files"], self.counts["metrics_rollup.bytes"] = (
+            _dir_stats(self.rollup))
+        return [("sink_rows", n == truth["events"],
+                 f"sink rows {n} vs events in the logs {truth['events']}"),
+                ("app_ids", not extra and len(rows) == len(truth["apps"]),
+                 f"ids not in the logs' truth, e.g. {extra[:2]}"),
+                ("app_tasks", tasks_ok), ("app_executors", execs_ok)]
+
+    # -- corpus_index ----------------------------------------------------------
+    def corpus_index(self) -> None:
+        spark = self.spark
+        c = corpus.write(self.work, N_DOCS, N_NEW_DOCS, N_QUERY_VECS, self.seed)
+        docs = spark.read.parquet(c["documents"])
+        emb = spark.read.parquet(c["embeddings"])
+        self.new_docs = spark.read.parquet(c["new_documents"])
+        self.queries = spark.read.parquet(c["queries"])
+        self.labels, self.query_labels = c["labels"], c["query_labels"]
+        # planted near-duplicates between the probe batch and the corpus
+        self.probe_pairs = {p for p in c["pairs"] if p[1] >= N_DOCS}
+        rng = random.Random(self.seed * 1_000_003 + 29)
+        # ids below 10 stay: the graph expansion queries the lowest ids
+        self.losers = sorted(rng.sample(range(10, N_DOCS), max(1, round(LOSER_SHARE * N_DOCS))))
+
+        c0 = proctree.cpu_s()
+        self.together([
+            lambda: self.DI.write_dedup_index(docs, self.index["s13"]),
+            lambda: self.AI.write_ann_index(emb, self.index["s14"]),
+            lambda: self.KG.write_knn_graph(emb, self.index["s16"]),
+            lambda: self.TS.write_training_shards(docs, self.index["s15"]),
+        ])
+        self.metrics["build_cpu_s"] = proctree.cpu_s() - c0
+        self.metrics["bytes_per_record"] = sum(
+            _dir_stats(p)[1] for p in self.index.values()) / N_DOCS
+        self.lap("build")
+
+        losers = spark.createDataFrame([(i,) for i in self.losers], "doc_id bigint")
+        c0 = proctree.cpu_s()
+        self.MT.run_retention_pass(
+            spark, losers, dedup_index_path=self.index["s13"],
+            ann_index_path=self.index["s14"], knn_graph_path=self.index["s16"],
+            training_shards_path=self.index["s15"])
+        update_cpu = (proctree.cpu_s() - c0) * 1000.0
+        self.lap("update")
+
+        # the corpus after retention, as a pipeline would serve it next; the
+        # server needs an events frame, and no event route is asked
+        gone = f"NOT doc_id IN ({','.join(map(str, self.losers))})"
+        srv, th, port = self.start_server(
+            spark.createDataFrame([], "app_id string"),
+            documents=docs.where(gone),
+            embeddings=emb.where(gone.replace("doc_id", "vec_id")),
+            dedup_index_path=self.index["s13"], ann_index_path=self.index["s14"],
+            knn_graph_path=self.index["s16"], training_shards_path=self.index["s15"],
+            warmup=False)
+        try:
+            self.rounds(lambda: self.index_round(port, set(self.losers)))
+        finally:
+            self.stop_server(srv, th)
+        left = self.shard_ids()
+        self.ledger.op([("erased_ids", len(left) == N_DOCS - len(self.losers)
+                         and not set(left) & set(self.losers),
+                         f"{len(left)} docs left in the shards, erased among them: "
+                         f"{sorted(set(left) & set(self.losers))}")])
+        self.lap("check")
+        self.finish(update_cpu)
+
+    def index_round(self, port: int, erased: set[int]) -> list:
+        """One pass over the index query paths, as operations to run
+        together, each answer checked: the probe batch against the dedup
+        index, the query vectors against the ANN index, and the
+        index-served sweep and graph expansion."""
+        return [lambda: self.probe_op(erased), lambda: self.ann_op(erased),
+                lambda: self.sweep_op(port, erased), lambda: self.graph_op(port)]
+
+    def probe_op(self, erased: set[int]) -> None:
+        pairs = self.DI.minhash_lsh_probe_index(
+            self.spark, self.index["s13"], self.new_docs).collect()
+        found = {(r["doc_a"], r["doc_b"]) for r in pairs}
+        seen = {i for r in pairs for i in (r["doc_a"], r["doc_b"])}
+        want = {p for p in self.probe_pairs if not set(p) & erased}
+        self.ledger.op([("dedup_pairs", want <= found,
+                         f"planted pairs missed: {sorted(want - found)[:3]}"),
+                        ("erased_ids", not seen & erased,
+                         f"erased ids in probe pairs: {sorted(seen & erased)}")])
+
+    def ann_op(self, erased: set[int]) -> None:
+        hits = self.AI.ann_ivf_pq_from_index(
+            self.spark, self.index["s14"], self.queries).collect()
+        first = {r["query_id"]: r["neighbor_id"] for r in hits if r["rank"] == 1}
+        served = {r["neighbor_id"] for r in hits}
+        self.ledger.op([
+            ("ann_neighbors", len(first) == N_QUERY_VECS and all(
+                self.labels[n] == self.query_labels[q] for q, n in first.items()),
+             f"nearest neighbours by query: {first}"),
+            ("erased_ids", not served & erased,
+             f"erased ids among neighbours: {sorted(served & erased)}")])
+
+    def sweep_op(self, port: int, erased: set[int]) -> None:
+        status, sweep = self.get(port, "dedup_sweep", INDEX_ROUTES["dedup_sweep"])
+        checks = [("http_status", status == 200)]
+        if status == 200:
+            n_docs = N_DOCS - len(erased)
+            checks.append(("erased_ids", bool(sweep) and all(r["n_docs"] == n_docs for r in sweep),
+                           f"swept n_docs {sweep and sweep[0]['n_docs']} vs live {n_docs}"))
+        self.ledger.op(checks)
+
+    def graph_op(self, port: int) -> None:
+        status, graph = self.get(port, "graph_expand", INDEX_ROUTES["graph_expand"])
+        checks = [("http_status", status == 200)]
+        if status == 200:
+            checks.append(("ann_neighbors", bool(graph) and all(
+                r["recall_graph"] >= r["recall_seed"] for r in graph)))
+        self.ledger.op(checks)
+
+    def shard_ids(self) -> list[int]:
+        """Document ids in the training shards, read back with pyarrow
+        rather than through the engine."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        files = glob.glob(os.path.join(self.index["s15"], "shards", "shard=*", "*.parquet"))
+        return [i for f in files
+                for i in pq.read_table(f, columns=["doc_id"]).column("doc_id").to_pylist()]
 
     # -- per-layer ------------------------------------------------------------
     def layers(self, log_dir: str) -> dict[str, float]:
@@ -592,7 +736,7 @@ class Bench:
                     out[f"{name}.{c}"] = v
         for c, v in req.items():
             out[f"api.request.{c}"] = v
-        for key in ROUTES:
+        for key in list(ROUTES) + list(INDEX_ROUTES):
             ms = [(s["end_ms"] - s["start_ms"]) for s in spans
                   if s["name"] == f"api.request.{key}"]
             if ms:
@@ -601,22 +745,6 @@ class Bench:
         for c in CHECKS:
             out[f"check.{c}.failed"] = self.ledger.check_failed[c]
         return out
-
-    def live_heap(self, spark) -> None:
-        """JVM heap in use after a full collection, with the workload's
-        caches still held: what the engine keeps in memory between
-        requests."""
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.System.gc()
-        heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
-        self.report.append(
-            ("live_heap_mb", heap.getHeapMemoryUsage().getUsed() / 1048576.0, "MB"))
-
-    def sizes(self) -> None:
-        self.counts["event_logs.sink_files"], self.counts["event_logs.sink_bytes"] = (
-            _dir_stats(self.sink))
-        self.counts["metrics_rollup.files"], self.counts["metrics_rollup.bytes"] = (
-            _dir_stats(self.rollup))
 
 
 def run(args, work: str) -> tuple[Bench, dict | None]:
@@ -630,14 +758,14 @@ def run(args, work: str) -> tuple[Bench, dict | None]:
     try:
         with bench.tracer.span("session.get_spark"):
             spark = session.get_spark(app_name=f"perfbench-{args.workload}")
+        bench.lap("session")
         bench.bind(spark)
         getattr(bench, args.workload)()
-        bench.sizes()
-        bench.live_heap(spark)
         bench.report.append(("peak_rss_mb", proctree.peak_rss_mb(), "MB"))
     finally:
         if spark is not None:
             _stop_spark(spark)
+            bench.lap("stop")
     return bench, (bench.layers(log_dir) if args.trace else None)
 
 

@@ -19,6 +19,7 @@ import glob
 import json
 import os
 import re
+import threading
 import time
 from collections import defaultdict
 from contextlib import contextmanager
@@ -35,24 +36,37 @@ _TAG = re.compile(r"op=([^,]+)")
 
 class Tracer:
     """Holds spans in memory; writes nothing until asked. When disabled,
-    ``span`` costs one attribute check. Spans are opened by the thread
-    that drives the workload only, so they nest as a stack."""
+    ``span`` costs one attribute check.
+
+    Spans nest per thread. A span opened on a thread with no open span
+    of its own (an HTTP handler thread, say) nests under the newest span
+    still open on any thread: in a traced run the benchmark has one
+    operation in flight at a time, so that is the request waiting for
+    the handler."""
 
     def __init__(self, enabled: bool):
         self.enabled = enabled
         self.spans: list[dict] = []
         self.spark = None
-        self._stack: list[int] = []
+        self._local = threading.local()
+        self._open: list[int] = []
+        self._lock = threading.Lock()
 
     @contextmanager
     def span(self, name: str):
         if not self.enabled:
             yield
             return
-        rec = {"name": name, "start_ms": time.time() * 1000.0, "end_ms": None,
-               "parent": self._stack[-1] if self._stack else None}
-        self.spans.append(rec)
-        self._stack.append(len(self.spans) - 1)
+        stack = self._local.__dict__.setdefault("stack", [])
+        with self._lock:
+            parent = stack[-1] if stack else (self._open[-1] if self._open else None)
+            rec = {"name": name, "start_ms": time.time() * 1000.0, "end_ms": None,
+                   "parent": parent}
+            self.spans.append(rec)
+            idx = len(self.spans) - 1
+            self._open.append(idx)
+        stack.append(idx)
+        # job tags are per thread, so a handler thread tags its own jobs
         tag = f"op={name}"
         if self.spark is not None:
             self.spark.addTag(tag)
@@ -61,7 +75,9 @@ class Tracer:
         finally:
             if self.spark is not None:
                 self.spark.removeTag(tag)
-            self._stack.pop()
+            stack.pop()
+            with self._lock:
+                self._open.remove(idx)
             rec["end_ms"] = time.time() * 1000.0
 
     def wrap(self, module, attr: str, name: str) -> None:

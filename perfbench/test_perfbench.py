@@ -1,5 +1,6 @@
-"""Tests of the benchmark's own parts: the event-log generator against
-its truth table, the trace reader, and BENCHMARK.json against run.py.
+"""Tests of the benchmark's own parts: the event-log and corpus generators
+against their truth, the tracer and its reader, and BENCHMARK.json against
+run.py.
 
     python3 -m pytest perfbench -q
 """
@@ -15,11 +16,13 @@ import time
 from collections import defaultdict
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
+import corpus  # noqa: E402
 import eventlogs  # noqa: E402
 import run  # noqa: E402
 import sparktrace  # noqa: E402
@@ -131,6 +134,69 @@ def test_growth_appends_in_place_to_running_logs(tmp_path):
     assert {p.endswith(".inprogress") for p in grown} == {True, False}
     assert all(p.endswith(".inprogress") or p.endswith(".zstd") for p in grown)
     assert appended == sum(os.path.getsize(p) - before[p] for p in grown)
+
+
+def _shingles(text: str, k: int = 3) -> set[str]:
+    w = text.split()
+    return {" ".join(w[i:i + k]) for i in range(len(w) - k + 1)}
+
+
+def test_corpus_plants_near_duplicates_and_clusters(tmp_path):
+    c = corpus.write(str(tmp_path), n_docs=120, n_new=20, n_queries=5, seed=4)
+    docs = pq.read_table(c["documents"]).to_pylist()
+    new = pq.read_table(c["new_documents"]).to_pylist()
+    assert [d["doc_id"] for d in docs + new] == list(range(140))
+    text = {d["doc_id"]: d["text"] for d in docs + new}
+    assert c["pairs"] and any(b >= 120 for _, b in c["pairs"])
+    for a, b in c["pairs"]:
+        sa, sb = _shingles(text[a]), _shingles(text[b])
+        # one word changed: well above the engine's 0.5 Jaccard threshold
+        assert len(sa & sb) / len(sa | sb) > 0.7
+    planted = {frozenset(p) for p in c["pairs"]}
+    for a in range(0, 140, 7):
+        for b in range(a + 1, 140, 5):
+            if frozenset((a, b)) not in planted and text[a] != text[b]:
+                sa, sb = _shingles(text[a]), _shingles(text[b])
+                assert len(sa & sb) / len(sa | sb) < 0.5
+    emb = pq.read_table(c["embeddings"]).to_pylist()
+    q = pq.read_table(c["queries"]).to_pylist()
+    assert [e["vec_id"] for e in emb] == list(range(120))
+    assert [e["vec_id"] for e in q] == list(range(5))
+    assert [e["label"] for e in emb] == c["labels"]
+    assert [e["label"] for e in q] == c["query_labels"]
+    assert all(len(e["embedding"]) == corpus.DIM for e in emb + q)
+
+    def d2(u, v):
+        return sum((x - y) ** 2 for x, y in zip(u, v))
+
+    # the nearest corpus vector of every query lies in its cluster
+    for e in q:
+        near = min(emb, key=lambda f: d2(f["embedding"], e["embedding"]))
+        assert near["label"] == e["label"]
+    assert corpus.write(str(tmp_path / "again"), 120, 20, 5, 4)["pairs"] == c["pairs"]
+
+
+def test_tracer_nests_spans_across_threads():
+    tr = sparktrace.Tracer(True)
+    done = []
+    with tr.span("request"):
+
+        def handler():
+            with tr.span("handler"):
+                with tr.span("handler.inner"):
+                    done.append(1)
+
+        th = threading.Thread(target=handler)
+        th.start()
+        th.join()
+    with tr.span("later"):
+        pass
+    names = [s["name"] for s in tr.spans]
+    parent = {s["name"]: (names[s["parent"]] if s["parent"] is not None else None)
+              for s in tr.spans}
+    assert done and parent == {"request": None, "handler": "request",
+                               "handler.inner": "handler", "later": None}
+    assert all(s["end_ms"] >= s["start_ms"] for s in tr.spans)
 
 
 def test_attribute_nesting_tags_and_windows():
