@@ -15,6 +15,9 @@ SQL events in ``time``, and SQL events use fully-qualified class names.
 
 The truth table is computed from the events as they are generated, so a
 reader that mis-places or mis-attributes events disagrees with it.
+``History.truth(defects)`` gives the same table as a reader with some of the
+``KNOWN_DEFECTS`` would see the files, so that a check can tell a known
+defect from any other wrong answer.
 """
 
 from __future__ import annotations
@@ -31,6 +34,21 @@ _SQL = "org.apache.spark.sql.execution.ui."
 _DAY_MS = 86_400_000
 #: First day a generated history may start on (2026-03-02, UTC).
 _EPOCH_MS = 1772409600000
+#: The time a reader pins for an event without a top-level ``Timestamp``
+#: (the engine's ``DEFAULT_NOW_MS``).
+FALLBACK_MS = 1735689600000
+
+#: Known defects of the engine's event-log reader (ROADMAP direction 2),
+#: as ``truth(defects)`` models them.
+KNOWN_DEFECTS = {
+    "event_ts": "events without a top-level Timestamp take the fallback "
+                "time, so every task lands on 2025-01-01",
+    "inprogress_app_id": "events of a flat <appId>.inprogress log that carry "
+                         "no App ID field take the file name, suffix "
+                         "included, as their app id",
+    "rolling_growth": "a rolling log's events file is read once, so events "
+                      "appended to it later never arrive",
+}
 
 
 def _dumps(ev: dict) -> str:
@@ -61,14 +79,20 @@ class _App:
         self.n_rolls = 0
         self.executors = [str(i) for i in range(1, rng.randint(3, 4) + 1)]
         self.cores = rng.choice([2, 4, 8])
-        self.truth = {
+        #: set while events are appended to an existing rolling file
+        self.late = False
+        #: running truth, split by (event carries an App ID, appended late)
+        self.parts: dict[tuple[bool, bool], dict] = {}
+
+    def _emit(self, out: list[str], ev: dict) -> dict:
+        """Write one event; returns the truth part it counts in."""
+        out.append(_dumps(ev))
+        t = self.parts.setdefault(("App ID" in ev, self.late), {
             "events": 0, "tasks": 0, "run_time_ms": 0,
             "executors": set(), "task_days": set(),
-        }
-
-    def _emit(self, out: list[str], ev: dict) -> None:
-        out.append(_dumps(ev))
-        self.truth["events"] += 1
+        })
+        t["events"] += 1
+        return t
 
     def header(self) -> list[str]:
         out: list[str] = []
@@ -118,8 +142,7 @@ class _App:
                 "Executor Info": {"Host": f"worker-{e}", "Total Cores": self.cores,
                                   "Log Urls": {}, "Attributes": {},
                                   "Resources": {}, "Resource Profile Id": 0},
-            })
-            self.truth["executors"].add(e)
+            })["executors"].add(e)
         self.clock = t + 1000
         return out
 
@@ -205,7 +228,7 @@ class _App:
                 ok = rng.random() > 0.03
                 peak = rng.randint(1, 3000) * 1_048_576
                 spill = rng.choice([0, 0, 0, rng.randint(1, 900) * 1_048_576])
-                self._emit(out, {
+                tr = self._emit(out, {
                     "Event": "SparkListenerTaskEnd", "Stage ID": s,
                     "Stage Attempt ID": 0,
                     "Task Type": "ResultTask" if s == stage_ids[-1]
@@ -267,7 +290,6 @@ class _App:
                         "Updated Blocks": [],
                     },
                 })
-                tr = self.truth
                 tr["tasks"] += 1
                 tr["run_time_ms"] += run
                 tr["executors"].add(ex)
@@ -388,6 +410,7 @@ class History:
         for app in self.apps:
             if not app.running:
                 continue
+            app.late = app.rolling
             lines = app.job()
             if app.rolling:
                 path, data = self._rolled(app), _zstd(lines)
@@ -401,17 +424,32 @@ class History:
             self.add_app(running=False)
         return appended
 
-    def truth(self) -> dict:
-        apps = {}
+    def truth(self, defects=frozenset()) -> dict:
+        """Per app and in total: events, tasks, run-time sum, executor ids
+        and the UTC days tasks finished on. With ``defects``, a subset of
+        ``KNOWN_DEFECTS``, the table a reader with those defects would build
+        from the files as they stand after the growth so far (a rolling
+        file counts as read before it grew)."""
+        merged: dict[str, dict] = {}
         for a in self.apps:
-            t = a.truth
-            apps[a.app_id] = {
-                "events": t["events"], "tasks": t["tasks"],
-                "run_time_ms": t["run_time_ms"],
-                "executors": sorted(t["executors"]),
-                "task_days": sorted(t["task_days"]),
-                "running": a.running,
-            }
+            for (has_id, late), t in a.parts.items():
+                if late and "rolling_growth" in defects:
+                    continue
+                aid = a.app_id
+                if ("inprogress_app_id" in defects and a.running and not a.rolling
+                        and not has_id):
+                    aid += ".inprogress"
+                m = merged.setdefault(aid, {
+                    "events": 0, "tasks": 0, "run_time_ms": 0,
+                    "executors": set(), "task_days": set(), "running": a.running})
+                for k in ("events", "tasks", "run_time_ms"):
+                    m[k] += t[k]
+                m["executors"] |= t["executors"]
+                m["task_days"] |= ({day_of(FALLBACK_MS)} if "event_ts" in defects
+                                   and t["task_days"] else t["task_days"])
+        apps = {aid: {**m, "executors": sorted(m["executors"]),
+                      "task_days": sorted(m["task_days"])}
+                for aid, m in merged.items()}
         days = sorted({d for a in apps.values() for d in a["task_days"]})
         return {
             "apps": apps,

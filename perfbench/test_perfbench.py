@@ -32,25 +32,37 @@ _TIMESTAMPED = {"SparkListenerBlockManagerAdded", "SparkListenerApplicationStart
                 "SparkListenerApplicationEnd"}
 
 
-def _read_back(base: str) -> dict[str, list[dict]]:
+def _read_back(base: str, sizes: dict[str, int] | None = None,
+               file_ids: bool = False) -> dict[str, list[dict]]:
     """Every event under a history dir, keyed by the app id its file or
-    directory name carries, read with stdlib json and pyarrow zstd."""
+    directory name carries, read with stdlib json and pyarrow zstd.
+
+    The two options read the way the known defects do: ``sizes`` reads a
+    rolling events file only up to the size it had then, and with
+    ``file_ids`` an event without an ``App ID`` field of a flat file
+    takes the whole file name as its app id."""
     out: dict[str, list[dict]] = defaultdict(list)
     for path in sorted(glob.glob(os.path.join(base, "*"))):
         name = os.path.basename(path)
         if os.path.isdir(path):
-            app = name[len("eventlog_v2_"):]
+            app = file_app = name[len("eventlog_v2_"):]
             files = sorted(glob.glob(os.path.join(path, "events_*")),
                            key=lambda p: int(os.path.basename(p).split("_")[1]))
         else:
             app = name[: -len(".inprogress")] if name.endswith(".inprogress") else name
+            file_app = name if file_ids else app
             files = [path]
         for f in files:
             data = open(f, "rb").read()
             if f.endswith(".zstd"):
+                if sizes is not None and f in sizes:
+                    data = data[:sizes[f]]
                 with pa.input_stream(pa.BufferReader(data), compression="zstd") as s:
                     data = s.read()
-            out[app] += [json.loads(x) for x in data.decode().splitlines() if x]
+            for x in data.decode().splitlines():
+                if x:
+                    e = json.loads(x)
+                    out[app if "App ID" in e else file_app].append(e)
     return out
 
 
@@ -134,6 +146,61 @@ def test_growth_appends_in_place_to_running_logs(tmp_path):
     assert {p.endswith(".inprogress") for p in grown} == {True, False}
     assert all(p.endswith(".inprogress") or p.endswith(".zstd") for p in grown)
     assert appended == sum(os.path.getsize(p) - before[p] for p in grown)
+
+
+def test_truth_as_the_known_defects_read_the_files(tmp_path):
+    base = str(tmp_path / "logs")
+    hist = eventlogs.History(base, seed=13, n_apps=20, running_share=0.2)
+    sizes = {p: os.path.getsize(p)
+             for p in glob.glob(os.path.join(base, "eventlog_v2_*", "events_*"))}
+    hist.grow(1)
+
+    def same(read, truth):
+        assert set(read) == set(truth["apps"])
+        for app, evs in read.items():
+            got, want = _truth_from_events(evs), truth["apps"][app]
+            assert (got["events"], got["tasks"], sorted(got["executors"])) == (
+                want["events"], want["tasks"], want["executors"])
+        assert truth["events"] == sum(len(v) for v in read.values())
+
+    right = hist.truth()
+    # a rolling file read before it grew
+    late = hist.truth({"rolling_growth"})
+    same(_read_back(base, sizes=sizes), late)
+    assert late["events"] < right["events"]
+    # ids from the flat file name: a running single-file app splits in two
+    split = hist.truth({"inprogress_app_id"})
+    same(_read_back(base, file_ids=True), split)
+    plain = [a for a in hist.apps if a.running and not a.rolling]
+    assert plain
+    for a in plain:
+        assert split["apps"][a.app_id]["events"] == 1
+        assert split["apps"][a.app_id + ".inprogress"]["tasks"] == right["apps"][a.app_id]["tasks"]
+    # every task on the fallback day
+    assert hist.truth({"event_ts"})["task_days"] == ["2025-01-01"]
+    assert eventlogs.day_of(eventlogs.FALLBACK_MS) == "2025-01-01"
+    both = hist.truth({"rolling_growth", "inprogress_app_id"})
+    same(_read_back(base, sizes=sizes, file_ids=True), both)
+
+
+def test_judge_tells_known_defects_from_wrong_answers(tmp_path):
+    bench = run.Bench(type("A", (), {"seed": 1, "trace": 0})(), str(tmp_path))
+    hist = eventlogs.History(str(tmp_path / "logs"), seed=17, n_apps=10)
+    hist.grow(1)
+    right = bench.set_truth(hist)
+    late = bench.truths[frozenset({"rolling_growth"})]
+
+    def served(n):
+        return lambda truth: [("http_status", True),
+                              ("sink_rows", n == truth["events"])]
+
+    bench.judge(served(right["events"]))
+    bench.judge(served(late["events"]))
+    bench.judge(served(late["events"] - 1))
+    led = bench.ledger
+    assert (led.attempted, led.failed, led.wrong) == (3, 2, 1)
+    assert led.check_failed["sink_rows"] == 2 and led.check_known["sink_rows"] == 1
+    assert led.defects["sink_rows"] == {"rolling_growth"}
 
 
 def _shingles(text: str, k: int = 3) -> set[str]:
